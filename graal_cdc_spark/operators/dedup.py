@@ -24,36 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graal_cdc_spark.build_once import build_once
 from graal_cdc_spark.operators.text import char_shingles, word_ngrams_exploded
-
-
-# signature-matrix memo: (app, input plan hash, params) -> checkpointed
-# frame (see minhash_signature_matrix docstring)
-_SIG_CACHE: dict[tuple, DataFrame] = {}
-
-# candidate-pair memo: the same build-once contract one level up —
-# the LSH pair list is a pure function of (input plan, params), and
-# three consumers walk it in one session (l06 emits it, l23 builds
-# components over it, l57 audits it), so the banded bucket join +
-# distinct executes ONCE per (app, input, params). Callers passing an
-# EXPLICIT ``sig`` bypass the memo (an arbitrary sig frame must never
-# be cached under the generic key). Bounded to 16 entries with
-# move-to-end-on-hit (true LRU) so a streaming caller churning one
-# plan hash per micro-batch can't evict its own hot entries; evicted
-# frames' checkpoint blocks are reclaimed by Spark's ContextCleaner
-# once the Python reference drops (no explicit unpersist API for
-# localCheckpoint blocks).
-_CAND_CACHE: dict[tuple, DataFrame] = {}
-
-# audit shingle-set memo: the exact-Jaccard leg's per-doc shingle
-# sets (semi-joined to the candidate population) are a pure function
-# of (input plan, params) just like the signature matrix one level
-# down — memoizing them makes a REPEATED audit run pure checkpoint
-# reads (VERDICT r9 #2: the driver bench observed a warm re-execution
-# slower than its cold run under late-suite block-manager pressure;
-# with every leg memoized the second execution rebuilds nothing, so
-# warm <= cold holds structurally, not just on a quiet machine).
-_AUDIT_SETS_CACHE: dict[tuple, DataFrame] = {}
 
 
 def exact_dedup(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -526,36 +498,27 @@ def minhash_signature_matrix(
     from graal_cdc_spark.sources.tables import with_min_parallelism
 
     spark = df.sparkSession
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _SIG_CACHE if k[0] != app]:
-        del _SIG_CACHE[stale]
-    key = (app, df.semanticHash(), id_col, text_col, n, num_hashes)
-    hit = _SIG_CACHE.get(key)
-    if hit is not None:
-        # refresh recency (true LRU — _CAND_CACHE rationale)
-        del _SIG_CACHE[key]
-        _SIG_CACHE[key] = hit
-        return hit
 
-    df = with_min_parallelism(spark, df)
-    sh = char_shingles(df, id_col, text_col, n, distinct=False)
-    with_base = sh.withColumn("__h0", F.xxhash64(F.col("shingle")))
-    hashed = with_base.select(
-        F.col(id_col),
-        *[
-            F.xxhash64(F.col("__h0"), F.lit(seed)).alias(f"h{seed}")
-            for seed in range(num_hashes)
-        ],
+    def build() -> DataFrame:
+        sh = char_shingles(
+            with_min_parallelism(spark, df), id_col, text_col, n,
+            distinct=False,
+        )
+        with_base = sh.withColumn("__h0", F.xxhash64(F.col("shingle")))
+        hashed = with_base.select(
+            F.col(id_col),
+            *[
+                F.xxhash64(F.col("__h0"), F.lit(seed)).alias(f"h{seed}")
+                for seed in range(num_hashes)
+            ],
+        )
+        return hashed.groupBy(id_col).agg(
+            *[F.min(f"h{seed}").alias(f"m{seed}") for seed in range(num_hashes)]
+        ).localCheckpoint(eager=False)
+
+    return build_once(
+        spark, "minhash_sig", (df, id_col, text_col, n, num_hashes), build
     )
-    sig = hashed.groupBy(id_col).agg(
-        *[F.min(f"h{seed}").alias(f"m{seed}") for seed in range(num_hashes)]
-    ).localCheckpoint(eager=False)
-    # bounded: a streaming caller (one micro-batch = one plan hash)
-    # would otherwise grow the memo without limit — evict oldest
-    while len(_SIG_CACHE) >= 16:
-        del _SIG_CACHE[next(iter(_SIG_CACHE))]
-    _SIG_CACHE[key] = sig
-    return sig
 
 
 def lsh_buckets(
@@ -621,36 +584,30 @@ def minhash_lsh_candidates(
     frame the memo is bypassed entirely (nothing enforces that an
     explicit sig matches the default derivation, so caching it under
     the generic key could poison later default-path callers).
-    """
-    spark = df.sparkSession
-    app = spark.sparkContext.applicationId
-    key = None
-    if sig is None:
-        for stale in [k for k in _CAND_CACHE if k[0] != app]:
-            del _CAND_CACHE[stale]
-        key = (app, df.semanticHash(), id_col, text_col, n, num_hashes, bands)
-        hit = _CAND_CACHE.get(key)
-        if hit is not None:
-            # refresh recency so a hot entry survives streaming churn
-            del _CAND_CACHE[key]
-            _CAND_CACHE[key] = hit
-            return hit
 
-    stacked = lsh_buckets(df, id_col, text_col, n, num_hashes, bands, sig)
-    x = stacked.select(F.col(id_col).alias("doc_a"), "band", "bucket")
-    y = stacked.select(F.col(id_col).alias("doc_b"), "band", "bucket")
-    cands = (
-        x.join(y, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .localCheckpoint(eager=False)
+    On the default path the pair list is build-once: l06 emits it,
+    l23 builds components over it and l57 audits it, so the banded
+    bucket join + distinct executes once per (input, params).
+    """
+
+    def build() -> DataFrame:
+        stacked = lsh_buckets(df, id_col, text_col, n, num_hashes, bands, sig)
+        x = stacked.select(F.col(id_col).alias("doc_a"), "band", "bucket")
+        y = stacked.select(F.col(id_col).alias("doc_b"), "band", "bucket")
+        return (
+            x.join(y, ["band", "bucket"])
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+
+    if sig is not None:
+        return build()
+    return build_once(
+        df.sparkSession, "lsh_candidates",
+        (df, id_col, text_col, n, num_hashes, bands), build,
     )
-    if key is not None:
-        while len(_CAND_CACHE) >= 16:
-            del _CAND_CACHE[next(iter(_CAND_CACHE))]
-        _CAND_CACHE[key] = cands
-    return cands
 
 
 def lsh_component_edges(
@@ -693,55 +650,40 @@ def lsh_component_edges(
     """
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    app = spark.sparkContext.applicationId
-    key = None
-    if sig is None:
-        # same memo discipline as the candidate list (a pure function
-        # of input plan + params; explicit sig bypasses — see
-        # minhash_lsh_candidates); "star" tag keeps the key spaces
-        # disjoint inside the shared cache
-        for stale in [k for k in _CAND_CACHE if k[0] != app]:
-            del _CAND_CACHE[stale]
-        key = (
-            app, "star", df.semanticHash(), id_col, text_col,
-            n, num_hashes, bands, dense_threshold,
+    def build() -> DataFrame:
+        stacked = lsh_buckets(df, id_col, text_col, n, num_hashes, bands, sig)
+        w = Window.partitionBy("band", "bucket")
+        marked = (
+            stacked.withColumn("rep", F.min(F.col(id_col)).over(w))
+            .withColumn("cnt", F.count(F.lit(1)).over(w))
+            .localCheckpoint(eager=False)
         )
-        hit = _CAND_CACHE.get(key)
-        if hit is not None:
-            del _CAND_CACHE[key]
-            _CAND_CACHE[key] = hit
-            return hit
+        small = marked.filter(F.col("cnt") <= dense_threshold)
+        dense = (
+            small.select("band", "bucket", F.col(id_col).alias("doc_a"))
+            .join(
+                small.select("band", "bucket", F.col(id_col).alias("doc_b")),
+                ["band", "bucket"],
+            )
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+        )
+        star = (
+            marked.filter(
+                (F.col("cnt") > dense_threshold)
+                & (F.col(id_col) != F.col("rep"))
+            )
+            .select(F.col("rep").alias("doc_a"), F.col(id_col).alias("doc_b"))
+        )
+        return dense.unionByName(star).distinct().localCheckpoint(eager=False)
 
-    stacked = lsh_buckets(df, id_col, text_col, n, num_hashes, bands, sig)
-    w = Window.partitionBy("band", "bucket")
-    marked = (
-        stacked.withColumn("rep", F.min(F.col(id_col)).over(w))
-        .withColumn("cnt", F.count(F.lit(1)).over(w))
-        .localCheckpoint(eager=False)
+    # same memo discipline as the candidate list (explicit sig bypasses)
+    if sig is not None:
+        return build()
+    return build_once(
+        df.sparkSession, "lsh_component_edges",
+        (df, id_col, text_col, n, num_hashes, bands, dense_threshold), build,
     )
-    small = marked.filter(F.col("cnt") <= dense_threshold)
-    dense = (
-        small.select("band", "bucket", F.col(id_col).alias("doc_a"))
-        .join(
-            small.select("band", "bucket", F.col(id_col).alias("doc_b")),
-            ["band", "bucket"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    star = (
-        marked.filter(
-            (F.col("cnt") > dense_threshold) & (F.col(id_col) != F.col("rep"))
-        )
-        .select(F.col("rep").alias("doc_a"), F.col(id_col).alias("doc_b"))
-    )
-    edges = dense.unionByName(star).distinct().localCheckpoint(eager=False)
-    if key is not None:
-        while len(_CAND_CACHE) >= 16:
-            del _CAND_CACHE[next(iter(_CAND_CACHE))]
-        _CAND_CACHE[key] = edges
-    return edges
 
 
 def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -922,7 +864,7 @@ def connected_components(
         # edge frame (InMemoryRelation preserves it; localCheckpoint
         # does not) — read 3.41 s vs 2.30 s old, interleaved medians
         # over 5 alternations on l23's real sf0.1 edge set (6 rounds/
-        # 3 probes per execution, scripts/r14_cc_ab.py). The cache
+        # 3 probes per execution, commit a44cb19). The cache
         # write + per-round InMemoryRelation scan costs more than the
         # saved exchange at this shuffle width; the checkpoint stays.
         .localCheckpoint(eager=False)
@@ -1061,18 +1003,11 @@ def minhash_estimate_audit(
     # collect_set to the candidate population (~7% of the corpus at
     # the default banding; the same LSH-then-verify asymmetry that
     # makes the audit affordable at 100 TB).
-    spark = df.sparkSession
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _AUDIT_SETS_CACHE if k[0] != app]:
-        del _AUDIT_SETS_CACHE[stale]
-    sets_key = (
-        app, df.semanticHash(), id_col, text_col, n, num_hashes, bands
-    )
-    doc_sets = _AUDIT_SETS_CACHE.get(sets_key)
-    if doc_sets is not None:
-        del _AUDIT_SETS_CACHE[sets_key]  # LRU refresh
-        _AUDIT_SETS_CACHE[sets_key] = doc_sets
-    else:
+    # The sets are build-once like the signature matrix one level
+    # down, so a REPEATED audit is pure checkpoint reads (VERDICT r9
+    # #2: with every leg memoized the second execution rebuilds
+    # nothing, so warm <= cold holds structurally).
+    def build_sets() -> DataFrame:
         needed = (
             cands.select(F.col("doc_a").alias(id_col))
             .unionByName(cands.select(F.col("doc_b").alias(id_col)))
@@ -1086,7 +1021,7 @@ def minhash_estimate_audit(
         # longs — Jaccard is unchanged short of a 64-bit collision
         # (≪ the estimator error this audit measures; the exact-oracle
         # twin l81 keeps portable hashes end to end).
-        doc_sets = (
+        return (
             char_shingles(
                 df.join(needed, id_col, "left_semi"),
                 id_col, text_col, n, distinct=False,
@@ -1096,9 +1031,11 @@ def minhash_estimate_audit(
             .agg(F.collect_set("sh").alias("ss"))
             .localCheckpoint(eager=False)
         )
-        while len(_AUDIT_SETS_CACHE) >= 16:
-            del _AUDIT_SETS_CACHE[next(iter(_AUDIT_SETS_CACHE))]
-        _AUDIT_SETS_CACHE[sets_key] = doc_sets
+
+    doc_sets = build_once(
+        df.sparkSession, "minhash_audit_sets",
+        (df, id_col, text_col, n, num_hashes, bands), build_sets,
+    )
     exact = (
         cands.join(
             doc_sets.select(

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from graal_cdc_spark.build_once import build_once
+
 
 def mg_merge(summary, counts, k: int):
     """Merge a batch's exact counts into a capacity-``k`` MG summary
@@ -92,11 +94,6 @@ def misra_gries_summaries(
     )
 
 
-# Materialized token-frame memo for heavy_hitters_exact — see its
-# docstring; one entry per (app, input plan, column).
-_TOKEN_FRAME_CACHE: dict[tuple, DataFrame] = {}
-
-
 def heavy_hitters_exact(
     tokens: DataFrame, token_col: str, k: int, n_total: DataFrame | None = None
 ) -> DataFrame:
@@ -124,17 +121,12 @@ def heavy_hitters_exact(
     tokens (e.g. char n-grams: SUM(length(text)-n+1)) skip a third
     pass entirely.
     """
-    app = tokens.sparkSession.sparkContext.applicationId
-    for stale in [c for c in _TOKEN_FRAME_CACHE if c[0] != app]:
-        del _TOKEN_FRAME_CACHE[stale]
-    key = (app, tokens.semanticHash(), token_col)
-    toks = _TOKEN_FRAME_CACHE.get(key)
-    if toks is None:
-        toks = (
-            tokens.select(F.col(token_col).cast("string").alias("token"))
-            .localCheckpoint(eager=False)
-        )
-        _TOKEN_FRAME_CACHE[key] = toks
+    toks = build_once(
+        tokens.sparkSession, "token_frame", (tokens, token_col),
+        lambda: tokens.select(
+            F.col(token_col).cast("string").alias("token")
+        ).localCheckpoint(eager=False),
+    )
     cands = (
         misra_gries_summaries(toks, "token", k).select("token").distinct()
     )

@@ -3147,7 +3147,7 @@ def _l62(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a lazy checkpoint, two per-label hash aggregates, two BROADCAST
     # builds (each its own driver job) and two joins: ~0.85 s of pure
     # stage/broadcast latency around a 0.30 s nsq compute (isolated,
-    # scripts/r14_l62_ab.py). Scale shape: rows with equal (label,
+    # commit 1d71762). Scale shape: rows with equal (label,
     # nsq) are interchangeable for every statistic below, and nsq
     # lives in the BOUNDED domain [0, d·127²] — so the per-row frame
     # first compresses to (label, nsq, weight) through an ordinary
@@ -3164,9 +3164,12 @@ def _l62(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dev_sum = Σ dev·w, and the strict 2×-MAD test dev·n > dev_sum·2
     # counts w per qualifying value; a label with zero outliers sums
     # 0 literals, reproducing the old coalesce(n_outliers, 0).
+    # NULL labels are dropped explicitly: the oracle's
+    # `JOIN … USING (label)` never matches them.
     w = Window.partitionBy("label")
     devs = (
-        normsq.groupBy("label", "nsq")
+        normsq.filter(F.col("label").isNotNull())
+        .groupBy("label", "nsq")
         .agg(F.count(F.lit(1)).alias("__w"))
         .withColumn("n", F.sum("__w").over(w))
         .withColumn("s", F.sum(F.col("nsq") * F.col("__w")).over(w))

@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graal_cdc_spark.build_once import build_once
 from graal_cdc_spark.session import configure
 
 def events_schema():
@@ -71,23 +72,24 @@ TABLES: tuple[str, ...] = (
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
-# Loaded-DataFrame memo: a DataFrame is an immutable logical plan, so
-# reusing it across queries is safe and skips the parquet footer/schema
-# read (~100 ms each) that otherwise recurs once per table per query.
-# Keyed by Spark application id so a new session never sees stale plans.
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-# Which sf_dir the session's temp views currently point at.
-_VIEWS_FOR: dict[str, str] = {}
+# (SparkContext, sf_dir) the temp views currently point at.
+_VIEWS_FOR: tuple | None = None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The parquet table ``name`` of ``sf_dir`` with normalized
+    timestamps. Build-once: a DataFrame is an immutable logical plan,
+    so reusing it across queries is safe and skips the parquet
+    footer/schema read (~100 ms each) that otherwise recurs once per
+    table per query."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _CACHE.get(key)
-    if cached is not None:
-        return cached
+    return build_once(
+        spark, "table", (sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for col in _NANOS_TS_COLS.get(name, ()):
@@ -104,7 +106,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    _CACHE[key] = df
     return df
 
 
@@ -115,18 +116,19 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     session with a non-UTC timezone, and the determinism protocol
     (FIXTURES.md §4) requires UTC.
     """
+    global _VIEWS_FOR
     configure(spark)
-    app = spark.sparkContext.applicationId
     # Re-register only when the views currently point at a different
     # sf_dir (or none); view registration costs ~1 s for the 10 tables.
-    views_fresh = _VIEWS_FOR.get(app) == sf_dir
+    views = (spark.sparkContext, sf_dir)
+    views_fresh = _VIEWS_FOR == views
     out: dict[str, DataFrame] = {}
     for name in TABLES:
         df = load_table(spark, sf_dir, name)
         if not views_fresh:
             df.createOrReplaceTempView(name)
         out[name] = df
-    _VIEWS_FOR[app] = sf_dir
+    _VIEWS_FOR = views
     return out
 
 

@@ -13,6 +13,7 @@ import pytest
 
 from graal_cdc_spark.plans import audit
 from graal_cdc_spark.queries import all_specs
+from graal_cdc_spark.testing import _spark_nonportable
 
 SF = "/root/testdata/sf0.01"
 
@@ -92,8 +93,6 @@ def test_no_slow_paths(spark, name):
     # 160 s of duplicated eager builders; the schema is sf-independent
     # and this test already built the DataFrame). The oracle-side
     # lint stays in test_oracle_types.
-    from graal_cdc_spark.testing import _spark_nonportable
-
     bad = _spark_nonportable(df)
     assert not bad, (
         f"{name}: result columns typed decimal (gate hash cannot "

@@ -67,3 +67,26 @@ def test_streaming_dedup_suppresses_redelivery(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     assert sorted(r["event_id"] for r in got.collect()) == [1, 2, 3]
+
+
+def test_l62_null_labels_match_oracle(spark, sf_dir, tmp_path):
+    """NULL ``embeddings.label`` rows: the oracle's ``JOIN … USING
+    (label)`` drops them, so the engine must too (no NULL-label group)."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from graal_cdc_spark.queries import all_specs
+    from graal_cdc_spark.testing import compare_query
+
+    shutil.copytree(sf_dir, tmp_path, dirs_exist_ok=True)
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    null_some = pc.equal(pc.bit_wise_and(emb["vec_id"], 7), 0)
+    label = pc.if_else(null_some, pa.scalar(None, pa.int32()), emb["label"])
+    emb = emb.set_column(emb.schema.get_field_index("label"), "label", label)
+    pq.write_table(emb, tmp_path / "embeddings.parquet")
+    assert emb["label"].null_count > 0
+
+    compare_query(spark, all_specs()["l62_embedding_norm_outliers"], str(tmp_path))

@@ -764,18 +764,18 @@ def test_minhash_estimate_audit_repeat_rebuilds_nothing(spark, sf_dir):
     explode (the expensive stage) never runs twice. Pinned
     structurally (char_shingles is not called at all on the repeat)
     rather than by timing, which VM weather can flip."""
+    from graal_cdc_spark import build_once
     from graal_cdc_spark.operators import dedup as D
     from graal_cdc_spark.sources.tables import load_table
 
+    build_once.clear()
     docs = load_table(spark, sf_dir, "documents")
-    D._SIG_CACHE.clear()
-    D._CAND_CACHE.clear()
-    D._AUDIT_SETS_CACHE.clear()
     first = sorted(
         map(tuple, D.minhash_estimate_audit(docs, "doc_id", "text").collect())
     )
-    assert len(D._AUDIT_SETS_CACHE) == 1
-    sets_obj = next(iter(D._AUDIT_SETS_CACHE.values()))
+    # table, signature matrix, candidate pairs, audit shingle sets
+    assert build_once.stats()["live"] == 4
+    before = build_once.stats()
 
     calls: list[int] = []
     orig = D.char_shingles
@@ -790,7 +790,9 @@ def test_minhash_estimate_audit_repeat_rebuilds_nothing(spark, sf_dir):
     finally:
         D.char_shingles = orig
     assert not calls, "repeat execution rebuilt a shingle stage"
-    assert next(iter(D._AUDIT_SETS_CACHE.values())) is sets_obj
+    after = build_once.stats()
+    assert after["builds"] == before["builds"]
+    assert after["hits"] >= before["hits"] + 3
     assert first == second
 
 
@@ -1324,16 +1326,20 @@ def test_kmeans_assigned_index_memo_and_contract(spark, sf_dir):
     repeat call returns the SAME memoized frame (build-once — repeat
     sweeps rebuild nothing), and the assignment agrees with
     kmeans_quantized."""
+    from graal_cdc_spark import build_once
     from graal_cdc_spark.operators.clustering import (
         kmeans_assigned_index,
         kmeans_quantized,
     )
 
+    build_once.clear()
     emb = load_table(spark, sf_dir, "embeddings")
     m1 = kmeans_assigned_index(emb, k=4, iters=1, scale=10_000)
     assert set(m1.columns) == {"pid", "cid", "x", "n2"}
+    builds = build_once.stats()["builds"]
     m2 = kmeans_assigned_index(emb, k=4, iters=1, scale=10_000)
     assert m1 is m2  # memo hit — no rebuild
+    assert build_once.stats()["builds"] == builds
     rows = m1.collect()
     for r in rows[:50]:
         assert r["n2"] == sum(v * v for v in r["x"])
