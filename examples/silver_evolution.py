@@ -11,7 +11,7 @@ One streaming pipeline (``pipelines/runner.py``) drives
 1. fold the batch's row-image field-sets into a persisted
    schema-version registry (known shapes keep their version, new
    field-sets get the next number);
-2. tag each row image with its version;
+2. route each row image to its version by its field-set;
 3. write each (table, version) slice with that version's columns —
    a mergeSchema read then serves the union, NULL where a row
    predates a column.

@@ -20,7 +20,9 @@ Scale: the field-set is computed map-side (sorted JSON keys of the
 ``after`` image — one string per event), the registry reduces through
 ONE (db, tbl, fields) aggregation whose output is bounded by the
 number of DISTINCT schemas (tiny), and version numbering is a window
-over that tiny frame — the log-sized data never sees a window.
+over that tiny frame — the log-sized data never sees a window. The
+incremental fold (``merge_registry``) runs on the driver over those
+few rows.
 """
 
 from __future__ import annotations
@@ -28,17 +30,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# CSV field-set of the row image, map-side. Delete events carry no
-# after image (after_json is the literal "null") and contribute no
-# schema evidence; an EMPTY object ({}) is a real, distinct shape.
-# (Built lazily: from_json schema parsing needs an active session.)
-def _fields():
-    return F.concat_ws(
-        ",",
-        F.array_sort(
-            F.map_keys(F.from_json("after_json", "map<string,string>"))
-        ),
+REGISTRY_COLUMNS = ("db", "tbl", "version", "fields", "first_seq", "n_events")
+
+
+def row_images(parsed: DataFrame) -> DataFrame:
+    """The schema evidence of a parsed envelope frame. Delete events
+    carry no after image (after_json is the literal "null") and
+    contribute none; an EMPTY object ({}) is a real, distinct shape."""
+    return parsed.filter(
+        (F.col("op") != "d")
+        & F.col("after_json").isNotNull()
+        & (F.col("after_json") != "null")
     )
+
+
+def after_map():
+    """The row image parsed once to ``map<string,string>``. (Built
+    lazily: from_json schema parsing needs an active session.)"""
+    return F.from_json("after_json", "map<string,string>")
+
+
+def field_set(image):
+    """CSV field-set of a parsed row image: its sorted keys."""
+    return F.concat_ws(",", F.array_sort(F.map_keys(image)))
 
 
 def schema_versions(parsed: DataFrame) -> DataFrame:
@@ -51,11 +65,8 @@ def schema_versions(parsed: DataFrame) -> DataFrame:
     e.g. from ``read_kafka_segments`` where only (seq, src_partition)
     is unique) break deterministically on the field-set string.
     """
-    evid = (
-        parsed.filter(F.col("op") != "d")
-        .filter(F.col("after_json").isNotNull())
-        .filter(F.col("after_json") != "null")
-        .select("db", "tbl", "seq", _fields().alias("fields"))
+    evid = row_images(parsed).select(
+        "db", "tbl", "seq", field_set(after_map()).alias("fields")
     )
     per_schema = evid.groupBy("db", "tbl", "fields").agg(
         F.min("seq").alias("first_seq"),
@@ -77,25 +88,29 @@ def events_with_schema_version(parsed: DataFrame) -> DataFrame:
     the lookup a silver writer uses to route rows to the right
     table layout. One broadcast join against the (tiny) registry."""
     reg = schema_versions(parsed).select("db", "tbl", "fields", "version")
-    evid = parsed.filter(
-        (F.col("op") != "d") & F.col("after_json").isNotNull()
-        & (F.col("after_json") != "null")
-    ).withColumn("fields", _fields())
+    evid = row_images(parsed).withColumn("fields", field_set(after_map()))
     return evid.join(F.broadcast(reg), ["db", "tbl", "fields"]).drop(
         "fields"
     )
 
 
-def merge_registry(existing: DataFrame, fresh: DataFrame) -> DataFrame:
+def merge_registry(existing: list[dict], fresh: list[dict]) -> list[dict]:
     """Idempotent registry maintenance: fold a fresh registry (built
-    from a new log slice) into the persisted control table. Known
-    (db, tbl, fields) rows keep their ORIGINAL version, take the
-    LEAST first_seq (a backfilled / out-of-order slice may carry
-    earlier evidence of a known shape — ADVICE r6), and accumulate
-    counts; unseen field-sets append with version numbers continuing
-    after the table's current max. Re-merging the same slice is a
-    no-op for versions (counts are the caller's responsibility to not
-    double-fold — pass only NEW slices).
+    from a new log slice) into the persisted control table. Both are
+    lists of row dicts with the ``REGISTRY_COLUMNS`` keys; a fresh
+    row's ``version`` is ignored (``schema_versions`` rows and bare
+    per-field-set aggregates fold alike). Both are bounded by the
+    number of distinct schemas, so the fold is plain Python on the
+    driver. Known (db, tbl, fields) rows keep their ORIGINAL version,
+    take the LEAST first_seq (a backfilled / out-of-order slice may
+    carry earlier evidence of a known shape — ADVICE r6), and
+    accumulate counts; unseen field-sets append with version numbers
+    continuing after the table's current max, in (first_seq, fields)
+    order — the same total order as ``schema_versions``. Folding into
+    an empty registry therefore numbers exactly as ``schema_versions``
+    does. Re-merging the same slice is a no-op for versions (counts
+    are the caller's responsibility to not double-fold — pass only
+    NEW slices).
 
     Version-number caveat under backfill: version numbers record
     MERGE-ORDER first appearance. If a backfilled slice reveals that a
@@ -105,42 +120,30 @@ def merge_registry(existing: DataFrame, fresh: DataFrame) -> DataFrame:
     corrected, so the batch-equivalent ordering can always be
     recomputed from the table itself.
     """
-    e = existing.select(
-        "db", "tbl", "fields",
-        F.col("version").alias("e_version"),
-        F.col("first_seq").alias("e_first_seq"),
-        F.col("n_events").alias("e_n"),
-    )
-    f = fresh.select(
-        "db", "tbl", "fields",
-        F.col("first_seq").alias("f_first_seq"),
-        F.col("n_events").alias("f_n"),
-    )
-    joined = e.join(f, ["db", "tbl", "fields"], "full_outer")
-    known = joined.filter(F.col("e_version").isNotNull()).select(
-        "db", "tbl", "fields",
-        F.col("e_version").alias("version"),
-        F.least(
-            "e_first_seq", F.coalesce("f_first_seq", "e_first_seq")
-        ).alias("first_seq"),
-        (F.col("e_n") + F.coalesce("f_n", F.lit(0))).alias("n_events"),
-    )
-    base = e.groupBy("db", "tbl").agg(F.max("e_version").alias("vmax"))
-    # same total order as schema_versions: first_seq then field-set
-    w = Window.partitionBy("db", "tbl").orderBy("f_first_seq", "fields")
-    new = (
-        joined.filter(F.col("e_version").isNull())
-        .join(F.broadcast(base), ["db", "tbl"], "left")
-        .select(
-            "db", "tbl", "fields",
-            (
-                F.coalesce("vmax", F.lit(0)) + F.row_number().over(w)
-            ).alias("version"),
-            F.col("f_first_seq").alias("first_seq"),
-            F.col("f_n").alias("n_events"),
-        )
-    )
-    return known.unionByName(new)
+    out = {
+        (r["db"], r["tbl"], r["fields"]): {c: r[c] for c in REGISTRY_COLUMNS}
+        for r in existing
+    }
+    vmax: dict[tuple, int] = {}
+    for (db, tbl, _), r in out.items():
+        vmax[(db, tbl)] = max(vmax.get((db, tbl), 0), r["version"])
+    new = []
+    for r in fresh:
+        known = out.get((r["db"], r["tbl"], r["fields"]))
+        if known is None:
+            new.append(r)
+        else:
+            known["first_seq"] = min(known["first_seq"], r["first_seq"])
+            known["n_events"] += r["n_events"]
+    for r in sorted(new, key=lambda r: (r["first_seq"], r["fields"])):
+        t = (r["db"], r["tbl"])
+        vmax[t] = vmax.get(t, 0) + 1
+        out[(*t, r["fields"])] = {
+            "db": r["db"], "tbl": r["tbl"], "version": vmax[t],
+            "fields": r["fields"], "first_seq": r["first_seq"],
+            "n_events": r["n_events"],
+        }
+    return list(out.values())
 
 
 def schema_as_of(parsed: DataFrame, probe_seqs) -> DataFrame:

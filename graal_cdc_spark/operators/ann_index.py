@@ -19,9 +19,9 @@ scales with corpus size; the centroid table stays driver-broadcastable
 because it is k × dim integers).
 
 Publish is atomic: build into ``<index_dir>.tmp-<token>`` and rename
-into place via the Hadoop FileSystem API (HDFS/S3A/local — the same
-pattern as ``streaming/dedup._StateDir``), so readers never observe a
-half-built index and a crashed build leaves the previous index live.
+into place via ``hadoop_fs.HadoopFs`` (HDFS/S3A/local), so readers
+never observe a half-built index and a crashed build leaves the
+previous index live.
 
 Determinism: training is the integer-exact Lloyd of
 ``operators/clustering.train_centroids`` with fixed tiebreaks, so two
@@ -35,51 +35,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graal_cdc_spark.hadoop_fs import HadoopFs
+
 MANIFEST = "_MANIFEST.json"
 VERSION = 1
-
-
-class _IndexFs:
-    """Hadoop-FileSystem wrapper for atomic index publish."""
-
-    def __init__(self, spark: SparkSession, path: str) -> None:
-        jvm = spark._jvm
-        self._jvm = jvm
-        self._Path = jvm.org.apache.hadoop.fs.Path
-        self._path = self._Path(path)
-        self._fs = self._path.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def exists(self, p: str) -> bool:
-        return self._fs.exists(self._Path(p))
-
-    def delete(self, p: str) -> None:
-        self._fs.delete(self._Path(p), True)
-
-    def rename(self, src: str, dst: str) -> None:
-        if not self._fs.rename(self._Path(src), self._Path(dst)):
-            raise OSError(f"index publish rename failed: {src} -> {dst}")
-
-    # NB: py4j passes byte[] BY VALUE — a Java-side read into a Python
-    # bytearray never reaches Python. Both directions therefore go
-    # through commons-io on the JVM (ships with Hadoop).
-
-    def write_text(self, p: str, text: str) -> None:
-        out = self._fs.create(self._Path(p), True)
-        try:
-            self._jvm.org.apache.commons.io.IOUtils.write(
-                text, out, "UTF-8"
-            )
-        finally:
-            out.close()
-
-    def read_text(self, p: str) -> str:
-        stream = self._fs.open(self._Path(p))
-        try:
-            return self._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
 
 
 def build_ivf_index(
@@ -117,7 +76,7 @@ def build_ivf_index(
     )
 
     spark = corpus.sparkSession
-    fs = _IndexFs(spark, index_dir)
+    fs = HadoopFs(spark, index_dir)
     token = spark.sparkContext.applicationId.replace(":", "-")
     tmp = f"{index_dir}.tmp-{token}"
     if fs.exists(tmp):
@@ -220,7 +179,7 @@ def _recover(spark: SparkSession, index_dir: str) -> bool:
     """Roll back a crashed publish: if the live dir is missing but a
     complete ``.old-*`` sibling exists (crash between the two publish
     renames), restore it. Returns True when an index is live."""
-    fs = _IndexFs(spark, index_dir)
+    fs = HadoopFs(spark, index_dir)
     if fs.exists(index_dir):
         return True
     import posixpath
@@ -228,13 +187,10 @@ def _recover(spark: SparkSession, index_dir: str) -> bool:
     parent = posixpath.dirname(index_dir.rstrip("/")) or "."
     base = posixpath.basename(index_dir.rstrip("/"))
     try:
-        names = [
-            s.getPath().toString()
-            for s in fs._fs.listStatus(fs._Path(parent))
-        ]
+        names = fs.list_names(parent)
     except Exception:
         return False
-    olds = [n for n in names if posixpath.basename(n).startswith(f"{base}.old-")]
+    olds = [f"{parent}/{n}" for n in names if n.startswith(f"{base}.old-")]
     for cand in sorted(olds, reverse=True):
         if fs.exists(f"{cand}/{MANIFEST}"):  # complete index only
             fs.rename(cand, index_dir)
@@ -243,7 +199,7 @@ def _recover(spark: SparkSession, index_dir: str) -> bool:
 
 
 def read_manifest(spark: SparkSession, index_dir: str) -> dict:
-    fs = _IndexFs(spark, index_dir)
+    fs = HadoopFs(spark, index_dir)
     if not fs.exists(index_dir) and not _recover(spark, index_dir):
         raise FileNotFoundError(f"no index at {index_dir}")
     m = json.loads(fs.read_text(f"{index_dir}/{MANIFEST}"))

@@ -1,81 +1,7 @@
-"""As-of (event-time backward) join.
-
-Spark has no native ASOF join; the idiomatic scalable formulation is
-the *union + ordered window* trick: tag both sides, union them, and
-carry the last right-side row forward with
-``last(..., ignorenulls=True)`` over an ordered per-key window. This
-costs exactly ONE shuffle on the join key (the window partition) —
-versus a naive range join which is O(n·m) per key — and never
-collects to the driver.
-
-Scale note: at 100 TB the window state per key is a single carried
-row (the running "last right value"), so executor memory is bounded;
-skewed keys are split by AQE. Deterministic tiebreaks: ordering is
-``(ts, seq)`` where ``seq`` is any monotonic unique column.
-"""
+"""Portable sortable (ts, id) encoding for the windowed as-of queries
+of ``queries/relational.py`` (Spark has no native ASOF join)."""
 
 from __future__ import annotations
-
-from collections.abc import Sequence
-
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
-
-def asof_join_backward(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    ts_col: str,
-    seq_col: str,
-    right_value_cols: Sequence[str],
-    strict: bool = True,
-) -> DataFrame:
-    """For each left row, attach the most recent right row with the same
-    key and earlier ``(ts, seq)`` (strictly earlier when ``strict``).
-
-    ``left`` and ``right`` must both carry ``on + [ts_col, seq_col]``;
-    right values are exposed as ``asof_<col>`` (NULL when no match).
-    """
-    lt = left.select(*on, ts_col, seq_col, *[c for c in left.columns if c not in set(on) | {ts_col, seq_col}])
-    l_tagged = lt.withColumn("__side", F.lit(1))
-    r_tagged = right.select(
-        *on,
-        ts_col,
-        seq_col,
-        *[F.col(c).alias(f"__rv_{c}") for c in right_value_cols],
-    ).withColumn("__side", F.lit(0))
-
-    # Align schemas for the union: left gets null right-values, right
-    # gets null left-extras.
-    l_extra = [c for c in l_tagged.columns if c not in r_tagged.columns]
-    r_extra = [c for c in r_tagged.columns if c not in l_tagged.columns]
-    for c in r_extra:
-        l_tagged = l_tagged.withColumn(c, F.lit(None))
-    for c in l_extra:
-        r_tagged = r_tagged.withColumn(c, F.lit(None))
-    unioned = l_tagged.unionByName(r_tagged)
-
-    # Order so that at equal (ts, seq) the right row sorts first when the
-    # join is inclusive, last when strict. With strict joins the frame
-    # ends at -1 (exclude current row) — but equal-ts right rows must
-    # also be excluded, hence the side ordering.
-    side_order = F.col("__side").asc() if not strict else F.col("__side").desc()
-    w = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(ts_col).asc(), F.col(seq_col).asc(), side_order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = unioned
-    for c in right_value_cols:
-        out = out.withColumn(
-            f"asof_{c}", F.last(F.col(f"__rv_{c}"), ignorenulls=True).over(w)
-        )
-    return (
-        out.filter(F.col("__side") == 1)
-        .drop("__side", *[f"__rv_{c}" for c in right_value_cols])
-    )
-
 
 # -- portable (ts, id) encoding for windowed as-of variants ------------------
 #

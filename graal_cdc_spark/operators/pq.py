@@ -110,10 +110,6 @@ def _subspace_best(books_s: list[list[int]], xs):
     return F.array_min(structs)
 
 
-def _subspace_argmin(books_s: list[list[int]], xs):
-    return _subspace_best(books_s, xs)["j"]
-
-
 def pq_encode(
     emb: DataFrame,
     books: list[list[list[int]]],

@@ -66,23 +66,6 @@ def langid_heuristic(text: Column) -> Column:
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality features: token counts, average word length,
-    stopword ratio — the classic pre-training quality filters."""
-    t = F.col(text_col)
-    n_words = token_count(t)
-    return df.withColumns(
-        {
-            "n_words": n_words.cast("int"),
-            "avg_word_len": (
-                (F.length(t) - n_words + 1) / n_words
-            ),  # total non-space chars / words (single-space-separated text)
-            "stopword_ratio": stopword_count(t) / n_words,
-            "bpe_tokens": bpe_token_count(t).cast("int"),
-        }
-    )
-
-
 def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint (md5 hex).
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 
 from graal_cdc_spark.cdc.envelope import parse_envelope
@@ -129,8 +130,20 @@ class PipelineRunner:
         return run
 
     def await_all(self) -> None:
-        for run in self._running.values():
-            run.query.awaitTermination()
+        """Await every query, then raise one error naming each pipeline
+        whose query failed — a failure never leaves the queries after
+        it un-awaited or their failures unreported."""
+        failed = {}
+        for name, run in list(self._running.items()):
+            try:
+                run.query.awaitTermination()
+            except StreamingQueryException as exc:
+                failed[name] = exc
+        if failed:
+            raise RuntimeError(
+                "pipelines failed: "
+                + "; ".join(f"{n}: {e}" for n, e in failed.items())
+            ) from next(iter(failed.values()))
 
     def stop(self, name: str) -> bool:
         """Stop one pipeline's query (resumable — the checkpoint

@@ -320,7 +320,7 @@ LIMIT 20
 def _r09(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For each 'purchase' event, the most recent strictly-prior 'error'
     event of the same user — windowed as-of formulation (single shuffle
-    on user_id; see operators/asof.py for the two-table generalization).
+    on user_id).
     """
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "error")

@@ -683,16 +683,17 @@ def _st17(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``streaming/silver.py``, the c24 philosophy applied to the
     streaming path): replay the CDC fixture through a checkpointed
     foreachBatch pipeline in two micro-batches — per batch the
-    registry folds incrementally (``merge_registry``), row images are
-    version-tagged, and versioned silver parquet is written — then
-    read the silver table back and gate its CONTENT against the
+    registry folds incrementally on the driver (``merge_registry``),
+    row images are routed to their version's slice, and versioned
+    silver parquet is written — then read the silver table back and
+    gate its CONTENT against the
     oracle's direct statement of the row-image semantics. Proves the
     runner → registry → silver dataflow delivers exactly the
     non-delete row images with their schema-version columns.
 
     Scale: everything inside is the production path (executor-parallel
-    writes, broadcast registry join, bounded driver state); the gate's
-    temp replay/checkpoint dirs are per-call and discarded.
+    writes, one aggregate collect per batch, bounded driver state); the
+    gate's temp replay/checkpoint dirs are per-call and discarded.
     """
     import tempfile
     from pathlib import Path

@@ -415,16 +415,6 @@ def read_table(
     return _read_data(spark, table, keep, fields)
 
 
-def commit_actions(table: str, version: int) -> tuple[list[str], list[str]]:
-    """(added paths, removed paths) recorded by commit ``version``."""
-    commit = commit_body(table, version)
-    added = [a["add"]["path"] for a in commit["actions"] if "add" in a]
-    removed = [
-        a["remove"]["path"] for a in commit["actions"] if "remove" in a
-    ]
-    return added, removed
-
-
 def _feed_schema(table: str, version: int) -> T.StructType | None:
     """The change-feed data schema at ``version`` + _change_type."""
     schema = table_schema(table, version)

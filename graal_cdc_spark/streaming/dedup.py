@@ -57,36 +57,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graal_cdc_spark.hadoop_fs import HadoopFs
 from graal_cdc_spark.operators.dedup import lsh_buckets
 
 _STATE_SCHEMA = "band INT, bucket BIGINT, doc_id BIGINT"
-
-
-class _StateDir:
-    """Hadoop-FileSystem-backed state directory (HDFS/S3/local)."""
-
-    def __init__(self, spark: SparkSession, path: str) -> None:
-        jvm = spark._jvm
-        self._Path = jvm.org.apache.hadoop.fs.Path
-        self._dir = self._Path(path)
-        self._fs = self._dir.getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        self._fs.mkdirs(self._dir)
-
-    def list_parquet(self) -> list[str]:
-        return sorted(
-            status.getPath().toString()
-            for status in self._fs.listStatus(self._dir)
-            if status.getPath().getName().endswith(".parquet")
-        )
-
-    def child(self, name: str) -> str:
-        return self._Path(self._dir, name).toString()
-
-    def rename(self, src: str, dst: str) -> None:
-        if not self._fs.rename(self._Path(src), self._Path(dst)):
-            raise OSError(f"rename failed: {src} -> {dst}")
 
 
 class StreamingLshDedup:
@@ -104,18 +78,26 @@ class StreamingLshDedup:
         max_iter: int = 30,
     ) -> None:
         self.spark = spark
-        self.state_dir = state_dir
+        self.state_dir = state_dir.rstrip("/")
         self.id_col = id_col
         self.text_col = text_col
         self.n = n
         self.num_hashes = num_hashes
         self.bands = bands
         self.max_iter = max_iter
-        self._sd = _StateDir(spark, state_dir)
+        self._fs = HadoopFs(spark, state_dir)
+        self._fs.mkdirs(state_dir)
 
     # -- state ----------------------------------------------------------
+    def _state_files(self) -> list[str]:
+        return [
+            f"{self.state_dir}/{n}"
+            for n in self._fs.list_names(self.state_dir)
+            if n.endswith(".parquet")
+        ]
+
     def _state(self) -> DataFrame:
-        files = self._sd.list_parquet()
+        files = self._state_files()
         if not files:
             return self.spark.createDataFrame([], _STATE_SCHEMA)
         return self.spark.read.schema(_STATE_SCHEMA).parquet(*files)
@@ -210,10 +192,10 @@ class StreamingLshDedup:
         to_append = admitted_buckets.join(existing, "doc_id", "left_anti")
         if to_append.limit(1).count() == 0:
             return
-        out = self._sd.child(f"admit-{uuid.uuid4().hex}.parquet")
+        out = f"{self.state_dir}/admit-{uuid.uuid4().hex}.parquet"
         # one file per batch append; executors write, driver only names
         to_append.coalesce(1).write.mode("overwrite").parquet(out + ".tmp")
-        self._sd.rename(out + ".tmp", out)
+        self._fs.rename(out + ".tmp", out)
 
     # -- driver ---------------------------------------------------------
     def run_stream(self, stream_df: DataFrame, checkpoint_dir: str):

@@ -7,25 +7,29 @@ mergeSchema evolution is proven in ``tests/test_schema_registry.py``.
 This module is the PRODUCTION composition a CDC pipeline actually
 runs: one ``foreachBatch`` consumer that, per micro-batch,
 
-1. folds the batch's schema evidence into a PERSISTED registry
-   (``merge_registry`` against the last published generation — known
-   shapes keep their version numbers, new field-sets get the next
-   version);
-2. tags the batch's row images with their schema version (one
-   broadcast join against the tiny registry);
-3. writes each (db, tbl, version) slice to the silver area with that
-   VERSION'S columns — so a new field arriving mid-stream starts a
-   new version directory, and a mergeSchema read serves the union
-   with NULLs for pre-evolution rows;
-4. atomically publishes the new registry generation as the batch's
-   commit marker.
+1. parses each row image ONCE to ``map<string,string>`` and collects
+   the batch's ``(db, tbl, fields) → min(seq), count`` aggregate —
+   the only Spark job of the control plane, bounded by the number of
+   distinct schemas;
+2. folds that aggregate into the last published registry generation
+   on the driver (``merge_registry`` — known shapes keep their version
+   numbers, new field-sets get the next version); the versions present
+   in the batch are the folded rows of the aggregate's keys;
+3. writes each (db, tbl, version) slice — a filter on its literal
+   (db, tbl, fields), projecting that VERSION's columns out of the
+   parsed map — to the silver area, so a new field arriving mid-stream
+   starts a new version directory, and a mergeSchema read serves the
+   union with NULLs for pre-evolution rows;
+4. publishes the new registry generation — one JSON file written to a
+   temporary path and renamed into place — as the batch's commit
+   marker.
 
 Crash/replay contract (the runner replays a batch whose epoch didn't
 commit): silver slices are written to per-(batch, version) directories
 in overwrite mode — a replay overwrites byte-identically — and the
 registry generation is renamed into place LAST, so a batch is either
 fully absent or fully applied; re-delivery of a committed batch is a
-no-op (the generation directory is the marker). This mirrors the
+no-op (the generation file is the marker). This mirrors the
 per-epoch idempotence of ``sources/cdc_log_ds.py``'s staged-rename
 writer.
 
@@ -42,16 +46,19 @@ signal in the data plane).
 
 from __future__ import annotations
 
+import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graal_cdc_spark.cdc.schema_registry import (
-    _fields,
+    after_map,
+    field_set,
     merge_registry,
-    schema_versions,
+    row_images,
 )
+from graal_cdc_spark.hadoop_fs import HadoopFs
 
 _REG_SCHEMA = (
     "db STRING, tbl STRING, version INT, fields STRING, "
@@ -62,42 +69,11 @@ _REG_SCHEMA = (
 _SAFE_NAME = re.compile(r"[A-Za-z0-9_-][A-Za-z0-9_.-]*")
 
 
-class _Fs:
-    """Hadoop-FileSystem wrapper (HDFS/S3A/local) — the atomic-rename
-    publish pattern shared with ``streaming/dedup._StateDir`` and
-    ``operators/ann_index._IndexFs``."""
-
-    def __init__(self, spark: SparkSession, root: str) -> None:
-        jvm = spark._jvm
-        self._Path = jvm.org.apache.hadoop.fs.Path
-        self._root = self._Path(root)
-        self._fs = self._root.getFileSystem(spark._jsc.hadoopConfiguration())
-        self._fs.mkdirs(self._root)
-
-    def exists(self, p: str) -> bool:
-        return self._fs.exists(self._Path(p))
-
-    def delete(self, p: str) -> None:
-        self._fs.delete(self._Path(p), True)
-
-    def rename(self, src: str, dst: str) -> None:
-        if not self._fs.rename(self._Path(src), self._Path(dst)):
-            raise OSError(f"silver publish rename failed: {src} -> {dst}")
-
-    def list_names(self, p: str) -> list[str]:
-        path = self._Path(p)
-        if not self._fs.exists(path):
-            return []
-        return sorted(
-            s.getPath().getName() for s in self._fs.listStatus(path)
-        )
-
-
 class SilverSchemaEvolution:
     """foreachBatch consumer: persisted schema registry + versioned
     silver writes under ``<root>/``:
 
-        <root>/_registry/gen-<batch id>/   control-table generations
+        <root>/_registry/gen-<batch id>.json   control-table generations
         <root>/silver/<db>/<tbl>/batch-<id>-v<version>/   row images
 
     Use ``sink()`` as the :class:`PipelineRunner` sink (the runner's
@@ -109,30 +85,31 @@ class SilverSchemaEvolution:
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
         self.root = root.rstrip("/")
-        self._fs = _Fs(spark, self.root)
+        self._fs = HadoopFs(spark, self.root)
+        self._fs.mkdirs(self.root)
         self._reg_dir = f"{self.root}/_registry"
 
     # -- registry state -------------------------------------------------
 
     def _gens(self) -> list[int]:
         return sorted(
-            int(n.split("-", 1)[1])
+            int(n[len("gen-"):-len(".json")])
             for n in self._fs.list_names(self._reg_dir)
-            if n.startswith("gen-")
+            if n.startswith("gen-") and n.endswith(".json")
         )
 
     def _gen_path(self, gen: int) -> str:
-        return f"{self._reg_dir}/gen-{gen:012d}"
+        return f"{self._reg_dir}/gen-{gen:012d}.json"
+
+    def _read_gen(self, gen: int) -> list[dict]:
+        return json.loads(self._fs.read_text(self._gen_path(gen)))
 
     def registry(self) -> DataFrame:
         """The latest published control table (empty frame before the
         first batch commits)."""
         gens = self._gens()
-        if not gens:
-            return self.spark.createDataFrame([], _REG_SCHEMA)
-        return self.spark.read.schema(_REG_SCHEMA).parquet(
-            self._gen_path(gens[-1])
-        )
+        rows = self._read_gen(gens[-1]) if gens else []
+        return self.spark.createDataFrame(rows, _REG_SCHEMA)
 
     # -- per-batch work -------------------------------------------------
 
@@ -140,98 +117,89 @@ class SilverSchemaEvolution:
         """Apply one micro-batch of the PARSED envelope frame
         (``parse_envelope`` output — what the runner's foreachBatch
         hands a sink)."""
-        gen_dir = self._gen_path(batch_id)
-        if self._fs.exists(gen_dir):
+        gen_path = self._gen_path(batch_id)
+        if self._fs.exists(gen_path):
             return  # committed batch re-delivered: full no-op
 
-        fresh = schema_versions(parsed)
-        prior = [g for g in self._gens() if g < batch_id]
-        if prior:
-            existing = self.spark.read.schema(_REG_SCHEMA).parquet(
-                self._gen_path(prior[-1])
-            )
-            merged = merge_registry(existing, fresh)
-        else:
-            merged = fresh
-        # the registry is bounded by distinct-schema count — the one
-        # permitted driver materialization (same class as centroids)
-        reg_rows = [r.asDict() for r in merged.collect()]
-        reg_df = self.spark.createDataFrame(reg_rows, _REG_SCHEMA) if (
-            reg_rows
-        ) else self.spark.createDataFrame([], _REG_SCHEMA)
+        # cached by the aggregate's job, so each row image is parsed
+        # once: the slice filters would otherwise re-run the parse
+        images = (
+            row_images(parsed)
+            .select("seq", "key", "op", "db", "tbl", after_map().alias("__m"))
+            .withColumn("fields", field_set(F.col("__m")))
+            .persist()
+        )
+        try:
+            reg = self._fold_and_write(images, batch_id)
+        finally:
+            images.unpersist()
 
-        # tag the batch's row images with their schema version
-        evid = (
-            parsed.filter(
-                (F.col("op") != "d")
-                & F.col("after_json").isNotNull()
-                & (F.col("after_json") != "null")
+        # commit marker LAST: registry generation, atomic rename
+        tmp = f"{self._reg_dir}/.tmp-{batch_id:012d}.json"
+        self._fs.write_text(tmp, json.dumps(reg))
+        self._fs.rename(tmp, gen_path)
+        # retention: the chain only ever needs the latest generation
+        # (plus the one being superseded during a replay window)
+        for g in self._gens()[:-2]:
+            self._fs.delete(self._gen_path(g))
+
+    def _fold_and_write(self, images: DataFrame, batch_id: int) -> list[dict]:
+        """Fold the batch into the registry and write its slices;
+        returns the folded registry (not yet published)."""
+        # the one Spark job: bounded by the batch's distinct schemas
+        fresh = [
+            r.asDict()
+            for r in images.groupBy("db", "tbl", "fields")
+            .agg(
+                F.min("seq").alias("first_seq"),
+                F.count(F.lit(1)).alias("n_events"),
             )
-            .withColumn("fields", _fields())
-        )
-        tagged = evid.join(
-            F.broadcast(reg_df.select("db", "tbl", "fields", "version")),
-            ["db", "tbl", "fields"],
-        )
-        # versions PRESENT in this batch (bounded by registry size)
-        present = {
-            (r["db"], r["tbl"], r["version"])
-            for r in tagged.select("db", "tbl", "version")
-            .distinct()
             .collect()
+        ]
+        prior = [g for g in self._gens() if g < batch_id]
+        reg = merge_registry(
+            self._read_gen(prior[-1]) if prior else [], fresh
+        )
+        version_of = {
+            (r["db"], r["tbl"], r["fields"]): r["version"] for r in reg
         }
-        fields_of = {
-            (d["db"], d["tbl"], d["version"]): d["fields"]
-            for d in reg_rows
-        }
-        for db, tbl, version in sorted(present):
-            # db/table names come from UNTRUSTED envelope payloads and
-            # become path segments — refuse anything that could escape
-            # the silver root rather than writing somewhere surprising
+
+        # rows with a NULL db/table carry no routable name: they stay in
+        # the registry but get no slice
+        slices = sorted(
+            (r["db"], r["tbl"], version_of[(r["db"], r["tbl"], r["fields"])],
+             r["fields"])
+            for r in fresh
+            if r["db"] is not None and r["tbl"] is not None
+        )
+        # db/table names come from UNTRUSTED envelope payloads and become
+        # path segments — refuse anything that could escape the silver
+        # root, before the first write
+        for db, tbl, _, _ in slices:
             for part in (db, tbl):
-                if not _SAFE_NAME.fullmatch(part or ""):
+                if not _SAFE_NAME.fullmatch(part):
                     raise ValueError(
                         f"silver: unsafe db/table name {part!r} "
                         "(allowed: letters, digits, _ . -; no path "
                         "separators, no leading dot)"
                     )
-            fields = fields_of[(db, tbl, version)]
-            slice_df = tagged.filter(
+        for db, tbl, version, fields in slices:
+            # a row-image key is an arbitrary JSON string: the map lookup
+            # takes it as a literal and the alias keeps it verbatim
+            cols = [
+                F.col("__m")[f].alias(f) for f in fields.split(",") if fields
+            ]
+            images.filter(
                 (F.col("db") == db)
                 & (F.col("tbl") == tbl)
-                & (F.col("version") == version)
-            )
-            cols = [F.col("seq"), F.col("key"), F.col("op"),
-                    F.col("version")]
-            if fields:
-                schema = ", ".join(
-                    # row-image keys are arbitrary JSON strings; escape
-                    # backticks so a hostile key can't break out of the
-                    # quoted identifier
-                    "`" + f.replace("`", "``") + "` STRING"
-                    for f in fields.split(",")
-                )
-                cols.append(F.from_json("after_json", schema).alias("__r"))
-                out = slice_df.select(*cols).select(
-                    "seq", "key", "op", "version", "__r.*"
-                )
-            else:  # the {} shape: audit columns only
-                out = slice_df.select(*cols)
-            out.write.mode("overwrite").parquet(
+                & (F.col("fields") == fields)
+            ).select(
+                "seq", "key", "op", F.lit(version).alias("version"), *cols
+            ).write.mode("overwrite").parquet(
                 f"{self.root}/silver/{db}/{tbl}/"
                 f"batch-{batch_id:012d}-v{version}"
             )
-
-        # commit marker LAST: registry generation, atomic rename
-        tmp = f"{self._reg_dir}/.tmp-{batch_id:012d}"
-        if self._fs.exists(tmp):
-            self._fs.delete(tmp)
-        reg_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        self._fs.rename(tmp, gen_dir)
-        # retention: the chain only ever needs the latest generation
-        # (plus the one being superseded during a replay window)
-        for g in self._gens()[:-2]:
-            self._fs.delete(self._gen_path(g))
+        return reg
 
     def sink(self):
         """foreachBatch adapter for :class:`PipelineRunner`."""

@@ -94,17 +94,6 @@ def _oracle_nonportable(cols_types) -> list[str]:
     ]
 
 
-def nonportable_columns(
-    spark_df, oracle_sql: str, sf_dir: str
-) -> list[str]:
-    """Result columns (either engine) whose type the gate hash cannot
-    canonicalize — empty list means the spec obeys the protocol.
-    Checks nested types too (struct/array of decimal)."""
-    return _spark_nonportable(spark_df) + _oracle_nonportable(
-        oracle_result_types(oracle_sql, sf_dir)
-    )
-
-
 def canon_value(v) -> str:
     """Canonicalize one cell to a comparison string."""
     if v is None:

@@ -330,6 +330,58 @@ def test_fanout_independence_and_cursor_recovery(spark, sf_dir, tmp_path):
     assert sorted(delivered["flaky"]) == parsed_seqs
 
 
+def test_await_all_awaits_every_pipeline_and_names_failures(
+    spark, sf_dir, tmp_path
+):
+    """The first pipeline's sink raises; ``await_all`` still waits for
+    the second to drain, then raises one error naming only the failed
+    pipeline."""
+    import time
+
+    from graal_cdc_spark.pipelines import PipelineRegistry
+    from graal_cdc_spark.pipelines.runner import PipelineRunner
+    from graal_cdc_spark.streaming import append_chunk
+
+    pdir = tmp_path / "scripts"
+    pdir.mkdir()
+    (pdir / "flaky.py").write_text(FANOUT_PIPE % {"name": "flaky"})
+    (pdir / "healthy.py").write_text(FANOUT_PIPE % {"name": "healthy"})
+    reg = PipelineRegistry()
+    reg.refresh(pdir)
+    replay = str(tmp_path / "queue")
+    append_chunk(build_cdc_events(spark, sf_dir).coalesce(1), replay)
+
+    runs = {}
+    delivered: list[int] = []
+
+    def broken_sink(batch_df, batch_id):
+        raise RuntimeError("sink down")
+
+    def slow_sink(batch_df, batch_id):
+        # still running when the flaky query has already failed
+        deadline = time.monotonic() + 60
+        while runs["flaky"].query.isActive and time.monotonic() < deadline:
+            time.sleep(0.05)
+        time.sleep(2)
+        delivered.extend(r.seq for r in batch_df.collect())
+
+    runner = PipelineRunner(
+        spark, replay_dir=replay, checkpoint_root=str(tmp_path / "ckpt")
+    )
+    pipes = reg.pipelines()
+    runs["flaky"] = runner.start(pipes["flaky"], broken_sink)
+    runs["healthy"] = runner.start(pipes["healthy"], slow_sink)
+
+    with pytest.raises(RuntimeError, match="flaky") as err:
+        runner.await_all()
+    assert "sink down" in str(err.value)
+    assert "healthy:" not in str(err.value)
+    assert not runs["healthy"].query.isActive
+    assert sorted(delivered) == sorted(
+        r.seq for r in parse_envelope(build_cdc_events(spark, sf_dir)).collect()
+    )
+
+
 # -- C3 end-to-end: hot reload restarts the query from its checkpoint --------
 
 RELOAD_PIPE = textwrap.dedent(

@@ -25,6 +25,12 @@ from graal_cdc_spark.cdc.schema_registry import (
 )
 
 
+def _rows(df):
+    """A registry DataFrame as the row-dict list ``merge_registry``
+    folds."""
+    return [r.asDict() for r in df.collect()]
+
+
 def _log(spark, rows):
     """rows: (seq, key, op, tbl, after_json-or-None)."""
     data = []
@@ -80,12 +86,12 @@ def test_merge_registry_incremental(spark):
     full = parse_envelope(_log(spark, EVOLVING))
     first = schema_versions(full.filter(F.col("seq") <= 4))
     fresh = schema_versions(full.filter(F.col("seq") > 4))
-    merged = merge_registry(first, fresh)
-    want = schema_versions(full)
-    key = lambda df: sorted(  # noqa: E731
+    merged = merge_registry(_rows(first), _rows(fresh))
+    want = _rows(schema_versions(full))
+    key = lambda rows: sorted(  # noqa: E731
         (r["db"], r["tbl"], r["version"], r["fields"], r["first_seq"],
          r["n_events"])
-        for r in df.collect()
+        for r in rows
     )
     assert key(merged) == key(want)
 
@@ -94,11 +100,11 @@ def test_merge_reapplied_slice_keeps_versions(spark):
     full = parse_envelope(_log(spark, EVOLVING))
     reg = schema_versions(full)
     fresh = schema_versions(full.filter(F.col("seq") > 4))
-    merged = merge_registry(reg, fresh)
+    merged = merge_registry(_rows(reg), _rows(fresh))
     # same (db, tbl, fields) rows, same version numbers and first_seq
     assert sorted(
         (r["tbl"], r["fields"], r["version"], r["first_seq"])
-        for r in merged.collect()
+        for r in merged
     ) == sorted(
         (r["tbl"], r["fields"], r["version"], r["first_seq"])
         for r in reg.collect()
@@ -145,10 +151,9 @@ def test_property_split_merge_equals_batch(spark):
         lo = schema_versions(parsed.filter(F.col("seq") <= cut))
         hi = schema_versions(parsed.filter(F.col("seq") > cut))
         got = sorted(
-            tuple(r)
-            for r in merge_registry(lo, hi)
-            .select("db", "tbl", "version", "fields", "first_seq", "n_events")
-            .collect()
+            (r["db"], r["tbl"], r["version"], r["fields"], r["first_seq"],
+             r["n_events"])
+            for r in merge_registry(_rows(lo), _rows(hi))
         )
         assert got == want
 
@@ -166,7 +171,7 @@ def test_merge_backfill_slice_corrects_first_seq(spark):
     early = schema_versions(full.filter(F.col("seq") <= 4))
     merged = {
         (r["tbl"], r["fields"]): r
-        for r in merge_registry(late, early).collect()
+        for r in merge_registry(_rows(late), _rows(early))
     }
     batch = {
         (r["tbl"], r["fields"]): r for r in schema_versions(full).collect()
@@ -218,23 +223,11 @@ def test_streaming_incremental_registry_golden(spark, tmp_path):
             events.filter(F.col("seq").between(lo, hi)).coalesce(1), replay
         )
 
-    state = {"reg": None}
+    state = {"reg": []}
 
     def fold(batch_df, _bid):
         fresh = schema_versions(parse_envelope(batch_df))
-        if state["reg"] is None:
-            state["reg"] = [r.asDict() for r in fresh.collect()]
-        else:
-            # dicts, not Rows: merge_registry's column ORDER differs
-            # from schema_versions' and createDataFrame(Row, schema)
-            # maps positionally
-            existing = batch_df.sparkSession.createDataFrame(
-                state["reg"], fresh.schema
-            )
-            state["reg"] = [
-                r.asDict()
-                for r in merge_registry(existing, fresh).collect()
-            ]
+        state["reg"] = merge_registry(state["reg"], _rows(fresh))
 
     stream = read_file_stream(
         spark, replay, "seq long, key string, value string",
@@ -325,6 +318,13 @@ def test_silver_schema_evolution_streaming_golden(spark, tmp_path):
     run = runner.start(pipe, lake.sink(), max_files_per_trigger=1)
     run.query.awaitTermination()
 
+    # each commit publishes one generation file; retention keeps two
+    reg_dir = tmp_path / "lake" / "_registry"
+    assert sorted(p.name for p in reg_dir.iterdir()
+                  if not p.name.endswith(".crc")) == [
+        f"gen-{b:012d}.json" for b in (1, 2)
+    ]
+
     reg_key = lambda df: sorted(  # noqa: E731
         (r["db"], r["tbl"], r["version"], r["fields"], r["first_seq"],
          r["n_events"])
@@ -361,6 +361,28 @@ def test_silver_schema_evolution_streaming_golden(spark, tmp_path):
     again = {r["seq"]: r for r in lake.read_silver("appdb", "users").collect()}
     assert set(again) == {1, 2, 3, 4, 7}
     assert again[7]["email"] == "y" and again[7]["version"] == 2
+
+
+def test_silver_values_render_from_one_map_parse(spark, tmp_path):
+    """Row-image values reach silver as the strings of the one
+    ``map<string,string>`` parse: numbers normalized, nested JSON kept
+    as JSON text, JSON null as NULL, non-ASCII intact, and a column
+    named by the raw key even when it holds a backtick."""
+    from graal_cdc_spark.streaming.silver import SilverSchemaEvolution
+
+    after = (
+        '{"a":1.50,"b":{"n":[1,2]},"c":true,"d":null,"e":"é",'
+        '"f":1E3,"g`h":"x"}'
+    )
+    parsed = parse_envelope(_log(spark, [(1, "k1", "c", "users", after)]))
+    lake = SilverSchemaEvolution(spark, str(tmp_path / "lake"))
+    lake.process_batch(parsed, 0)
+    [row] = lake.read_silver("appdb", "users").collect()
+    assert row.asDict() == {
+        "seq": 1, "key": "k1", "op": "c", "version": 1,
+        "a": "1.5", "b": '{"n":[1,2]}', "c": "true", "d": None,
+        "e": "é", "f": "1000.0", "g`h": "x",
+    }
 
 
 def test_property_silver_chunked_equals_batch(spark, tmp_path):

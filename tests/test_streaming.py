@@ -1061,13 +1061,13 @@ def test_streaming_lsh_dedup_invariants_and_replay(spark, sf_dir, tmp_path):
 
     # replay the same batch — crash-between-append-and-commit model
     rows_before = sink._state().count()
-    files_before = sink._sd.list_parquet()
+    files_before = sink._state_files()
     sink.process_batch(docs)
     again = {r["doc_id"] for r in sink.admitted_ids().collect()}
     assert again == admitted
     # and the replay must not grow state: no new rows, no new files
     assert sink._state().count() == rows_before
-    assert sink._sd.list_parquet() == files_before
+    assert sink._state_files() == files_before
 
 
 def test_windowed_distinct_users_stream_finalizes(spark, tmp_path):
