@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from graal_cdc_spark.build_once import build_once
 from graal_cdc_spark.queries import QuerySpec, register
+from graal_cdc_spark.session import run_concurrently
 from graal_cdc_spark.sources.tables import (
     load_table,
     ordered_result,
@@ -5400,20 +5401,26 @@ def _write_r99_tables(spark: SparkSession, sf_dir: str) -> str:
     # the build writes exactly 8 files per table — file count ∝ data
     # layout, not cores. Rows, bucket contents and the downstream
     # zero-shuffle join plan are unchanged (test_plans pins it).
-    load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    ).repartition(8, "o_orderkey").write.bucketBy(8, "o_orderkey").sortBy(
-        "o_orderkey"
-    ).mode("overwrite").saveAsTable(f"{db}.orders_b")
-    load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        (F.floor(F.col("l_extendedprice") * 100)).cast("long").alias(
-            "price_cents"
+    # The two builds are independent jobs: run them as one wave.
+    tables = {
+        "orders_b": load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority"
         ),
-    ).repartition(8, "o_orderkey").write.bucketBy(8, "o_orderkey").sortBy(
-        "o_orderkey"
-    ).mode("overwrite").saveAsTable(f"{db}.lineitem_b")
+        "lineitem_b": load_table(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("o_orderkey"),
+            F.col("l_quantity").cast("long").alias("qty"),
+            (F.floor(F.col("l_extendedprice") * 100)).cast("long").alias(
+                "price_cents"
+            ),
+        ),
+    }
+
+    def write(name: str) -> None:
+        tables[name].repartition(8, "o_orderkey").write.bucketBy(
+            8, "o_orderkey"
+        ).sortBy("o_orderkey").mode("overwrite").saveAsTable(f"{db}.{name}")
+
+    run_concurrently(spark, write, tables)
     return db
 
 

@@ -14,7 +14,10 @@ broadcast-hash joins for the small dimension tables.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs we also (re)apply to driver-provided sessions.
@@ -90,3 +93,27 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return configure(spark)
+
+
+def run_concurrently(
+    spark: SparkSession, fn: Callable[[object], object], items: Iterable
+) -> list:
+    """``[fn(item) for item in items]``, with the calls run at once on
+    at most ``defaultParallelism`` threads — for independent Spark
+    actions (one-task writes, say) that would otherwise leave the
+    cluster idle while the driver plans the next one.
+
+    Every call carries the caller's local properties (its job group,
+    which a streaming query's ``stop()`` cancels, and any span group a
+    tracer set). Returns only after every call has finished, then
+    raises the error of the first failed item in ``items`` order, so
+    no call is still running when the caller moves on (a commit marker
+    written after this sees every write complete)."""
+    items = list(items)
+    if not items:
+        return []
+    target = inheritable_thread_target(spark)(fn)
+    workers = min(len(items), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(target, item) for item in items]
+    return [f.result() for f in futures]

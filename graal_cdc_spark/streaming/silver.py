@@ -15,11 +15,16 @@ runs: one ``foreachBatch`` consumer that, per micro-batch,
    on the driver (``merge_registry`` — known shapes keep their version
    numbers, new field-sets get the next version); the versions present
    in the batch are the folded rows of the aggregate's keys;
-3. writes each (db, tbl, version) slice — a filter on its literal
-   (db, tbl, fields), projecting that VERSION's columns out of the
-   parsed map — to the silver area, so a new field arriving mid-stream
-   starts a new version directory, and a mergeSchema read serves the
-   union with NULLs for pre-evolution rows;
+3. checks every slice's db/table name, then writes each (db, tbl,
+   version) slice — a filter on its literal (db, tbl, fields),
+   projecting that VERSION's columns out of the parsed map — to the
+   silver area, so a new field arriving mid-stream starts a new version
+   directory, and a mergeSchema read serves the union with NULLs for
+   pre-evolution rows. The slices are independent one-task jobs over
+   the cached images, so they run as ONE concurrent wave
+   (``session.run_concurrently``: at most ``defaultParallelism`` at
+   once, each in the caller's job group) that returns only when every
+   write has finished;
 4. publishes the new registry generation — one JSON file written to a
    temporary path and renamed into place — as the batch's commit
    marker.
@@ -59,6 +64,7 @@ from graal_cdc_spark.cdc.schema_registry import (
     row_images,
 )
 from graal_cdc_spark.hadoop_fs import HadoopFs
+from graal_cdc_spark.session import run_concurrently
 
 _REG_SCHEMA = (
     "db STRING, tbl STRING, version INT, fields STRING, "
@@ -117,8 +123,8 @@ class SilverSchemaEvolution:
         """Apply one micro-batch of the PARSED envelope frame
         (``parse_envelope`` output — what the runner's foreachBatch
         hands a sink)."""
-        gen_path = self._gen_path(batch_id)
-        if self._fs.exists(gen_path):
+        gens = self._gens()  # the batch's one listing of _registry/
+        if batch_id in gens:
             return  # committed batch re-delivered: full no-op
 
         # cached by the aggregate's job, so each row image is parsed
@@ -129,22 +135,27 @@ class SilverSchemaEvolution:
             .withColumn("fields", field_set(F.col("__m")))
             .persist()
         )
+        prior = [g for g in gens if g < batch_id]
         try:
-            reg = self._fold_and_write(images, batch_id)
+            reg = self._fold_and_write(
+                images, batch_id, self._read_gen(prior[-1]) if prior else []
+            )
         finally:
             images.unpersist()
 
         # commit marker LAST: registry generation, atomic rename
         tmp = f"{self._reg_dir}/.tmp-{batch_id:012d}.json"
         self._fs.write_text(tmp, json.dumps(reg))
-        self._fs.rename(tmp, gen_path)
+        self._fs.rename(tmp, self._gen_path(batch_id))
         # retention: the chain only ever needs the latest generation
         # (plus the one being superseded during a replay window)
-        for g in self._gens()[:-2]:
+        for g in sorted({*gens, batch_id})[:-2]:
             self._fs.delete(self._gen_path(g))
 
-    def _fold_and_write(self, images: DataFrame, batch_id: int) -> list[dict]:
-        """Fold the batch into the registry and write its slices;
+    def _fold_and_write(
+        self, images: DataFrame, batch_id: int, prior_reg: list[dict]
+    ) -> list[dict]:
+        """Fold the batch into ``prior_reg`` and write its slices;
         returns the folded registry (not yet published)."""
         # the one Spark job: bounded by the batch's distinct schemas
         fresh = [
@@ -156,10 +167,7 @@ class SilverSchemaEvolution:
             )
             .collect()
         ]
-        prior = [g for g in self._gens() if g < batch_id]
-        reg = merge_registry(
-            self._read_gen(prior[-1]) if prior else [], fresh
-        )
+        reg = merge_registry(prior_reg, fresh)
         version_of = {
             (r["db"], r["tbl"], r["fields"]): r["version"] for r in reg
         }
@@ -183,7 +191,9 @@ class SilverSchemaEvolution:
                         "(allowed: letters, digits, _ . -; no path "
                         "separators, no leading dot)"
                     )
-        for db, tbl, version, fields in slices:
+
+        def write_slice(s: tuple[str, str, int, str]) -> None:
+            db, tbl, version, fields = s
             # a row-image key is an arbitrary JSON string: the map lookup
             # takes it as a literal and the alias keeps it verbatim
             cols = [
@@ -199,6 +209,11 @@ class SilverSchemaEvolution:
                 f"{self.root}/silver/{db}/{tbl}/"
                 f"batch-{batch_id:012d}-v{version}"
             )
+
+        # each slice is a small independent job (one task over the
+        # cached images): run them as one wave, which returns only
+        # once every write has finished
+        run_concurrently(self.spark, write_slice, slices)
         return reg
 
     def sink(self):

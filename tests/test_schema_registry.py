@@ -475,3 +475,99 @@ def test_silver_refuses_path_unsafe_table_names(spark, tmp_path):
     assert not reg_dir.exists() or not [
         p for p in os.listdir(reg_dir) if p.startswith("gen-")
     ]
+
+
+def test_silver_checks_every_name_before_the_first_write(spark, tmp_path):
+    """An unsafe name anywhere in the batch refuses the WHOLE batch
+    before any slice is written — even when it sorts after a safe
+    table, so the slices run as one wave only after every check."""
+    from graal_cdc_spark.streaming.silver import SilverSchemaEvolution
+
+    rows = [
+        (1, "k1", "c", "users", '{"id":"1"}'),
+        (2, "k2", "c", "zz/escape", '{"id":"2"}'),
+    ]
+    parsed = parse_envelope(_log(spark, rows))
+    lake = SilverSchemaEvolution(spark, str(tmp_path / "lake"))
+    with pytest.raises(ValueError, match="unsafe db/table name"):
+        lake.process_batch(parsed, 0)
+    assert not (tmp_path / "lake" / "silver").exists()
+    assert lake.registry().count() == 0
+
+
+def test_silver_failed_slice_write_publishes_nothing(spark, tmp_path):
+    """One slice write failing fails the batch with no commit marker;
+    once the cause is gone, the re-delivered batch writes every slice
+    and commits. (The failing slice's table directory is blocked by a
+    plain file: a plain file AT the slice path would simply be replaced
+    by the overwrite-mode write.)"""
+    import os
+
+    from graal_cdc_spark.streaming.silver import SilverSchemaEvolution
+
+    rows = [
+        (1, "k1", "c", "users", '{"id":"1","name":"a"}'),
+        (2, "k2", "c", "users", '{"id":"2","name":"b","email":"x"}'),
+        (3, "k9", "c", "orders", '{"id":"9"}'),
+    ]
+    parsed = parse_envelope(_log(spark, rows))
+    lake = SilverSchemaEvolution(spark, str(tmp_path / "lake"))
+    blocker = tmp_path / "lake" / "silver" / "appdb" / "orders"
+    blocker.parent.mkdir(parents=True)
+    blocker.write_text("not a directory")
+    with pytest.raises(Exception):
+        lake.process_batch(parsed, 0)
+    reg_dir = tmp_path / "lake" / "_registry"
+    assert not reg_dir.exists() or not [
+        p for p in os.listdir(reg_dir) if p.startswith("gen-")
+    ]
+
+    blocker.unlink()
+    lake.process_batch(parsed, 0)
+    assert (reg_dir / f"gen-{0:012d}.json").exists()
+    assert sorted(
+        (r["tbl"], r["version"]) for r in lake.registry().collect()
+    ) == [("orders", 1), ("users", 1), ("users", 2)]
+    assert sorted(
+        r["seq"] for r in lake.read_silver("appdb", "users").collect()
+    ) == [1, 2]
+    assert [r["seq"] for r in lake.read_silver("appdb", "orders").collect()] == [3]
+
+
+def test_silver_batches_leak_no_threads(spark, tmp_path):
+    """Each batch's slice wave runs on a fresh pool; its threads (and
+    the py4j connections they open) must end with it. Counted on both
+    sides of py4j: Python threads, and JVM threads serving a py4j
+    connection (the JVM's total also holds Spark's own stage pools,
+    which grow with the job count until their threads idle out)."""
+    import threading
+
+    from graal_cdc_spark.streaming.silver import SilverSchemaEvolution
+
+    jvm = spark._jvm
+
+    def threads():
+        traces = jvm.java.lang.Thread.getAllStackTraces()
+        py4j = sum(
+            any("py4j" in f.getClassName() for f in traces.get(t))
+            for t in traces.keySet().toArray()
+        )
+        return threading.active_count(), py4j
+
+    rows = [
+        (1, "k1", "c", "users", '{"id":"1","name":"a"}'),
+        (2, "k2", "c", "users", '{"id":"2","name":"b","email":"x"}'),
+        (3, "k9", "c", "orders", '{"id":"9"}'),
+    ]
+    parsed = parse_envelope(_log(spark, rows)).persist()
+    lake = SilverSchemaEvolution(spark, str(tmp_path / "lake"))
+    try:
+        for b in range(5):
+            lake.process_batch(parsed, b)
+        py5, jvm5 = threads()
+        for b in range(5, 30):
+            lake.process_batch(parsed, b)
+        py30, jvm30 = threads()
+    finally:
+        parsed.unpersist()
+    assert py30 <= py5 + 2 and jvm30 <= jvm5 + 2
