@@ -5,7 +5,7 @@ directory, then runs ``perfbench/run.py`` of each checkout in pairs,
 alternating which side runs first, for every workload x seed x pair.
 Per end-to-end metric of ``BENCHMARK.json`` it prints each side's
 median and quartiles, the number of pairs the change won (ties count
-for neither) and the verdict of the sandbox rule for a gain:
+for neither) and the verdict of the paired-run rule:
 
 * ``gain``: the change won at least nine tenths of the pairs and the
   medians differ, in the better direction, by more than the parent's
