@@ -105,15 +105,20 @@ def run_concurrently(
 
     Every call carries the caller's local properties (its job group,
     which a streaming query's ``stop()`` cancels, and any span group a
-    tracer set). Returns only after every call has finished, then
-    raises the error of the first failed item in ``items`` order, so
-    no call is still running when the caller moves on (a commit marker
-    written after this sees every write complete)."""
+    tracer set) in a copy of its own: Spark SQL sets and restores the
+    execution id and the session's ``spark.sql.*`` confs in the running
+    thread's properties for every action, so calls that shared one copy
+    would see each other's. Returns only after every call has finished,
+    then raises the error of the first failed item in ``items`` order,
+    so no call is still running when the caller moves on (a commit
+    marker written after this sees every write complete)."""
     items = list(items)
     if not items:
         return []
-    target = inheritable_thread_target(spark)(fn)
     workers = min(len(items), spark.sparkContext.defaultParallelism)
     with ThreadPoolExecutor(max_workers=workers) as pool:
-        futures = [pool.submit(target, item) for item in items]
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn), item)
+            for item in items
+        ]
     return [f.result() for f in futures]

@@ -116,16 +116,15 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seeds", default="1", help="comma-separated")
     ap.add_argument("--pairs", type=int, default=10,
                     help="pairs per (workload, seed)")
-    ap.add_argument("--repo", default=ROOT)
     args = ap.parse_args(argv)
     seeds = [int(s) for s in args.seeds.split(",")]
 
     revs = {
-        "parent": _git(args.repo, "rev-parse", "--verify", args.parent),
-        "change": _git(args.repo, "rev-parse", "--verify", args.change),
+        "parent": _git(ROOT, "rev-parse", "--verify", args.parent),
+        "change": _git(ROOT, "rev-parse", "--verify", args.change),
     }
     bench = json.loads(
-        _git(args.repo, "show", f"{revs['change']}:BENCHMARK.json")
+        _git(ROOT, "show", f"{revs['change']}:BENCHMARK.json")
     )
     seconds = int(bench.get("run_seconds", 12))
 
@@ -133,7 +132,7 @@ def main(argv: list[str] | None = None) -> int:
     trees = {side: os.path.join(tmp, side) for side in SIDES}
     try:
         for side in SIDES:
-            _git(args.repo, "worktree", "add", "--detach", trees[side], revs[side])
+            _git(ROOT, "worktree", "add", "--detach", trees[side], revs[side])
         runs = []  # one record per pair
         k = 0
         for workload in args.workload:
@@ -152,9 +151,9 @@ def main(argv: list[str] | None = None) -> int:
                     runs.append(pair)
     finally:
         for side in SIDES:
-            subprocess.run(["git", "-C", args.repo, "worktree", "remove",
+            subprocess.run(["git", "-C", ROOT, "worktree", "remove",
                             "--force", trees[side]], capture_output=True)
-        subprocess.run(["git", "-C", args.repo, "worktree", "prune"],
+        subprocess.run(["git", "-C", ROOT, "worktree", "prune"],
                        capture_output=True)
         shutil.rmtree(tmp, ignore_errors=True)
 

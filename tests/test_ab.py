@@ -8,6 +8,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 import pytest
 
@@ -62,9 +63,11 @@ def test_ab_alternates_and_reports_gain(tmp_path, monkeypatch, capsys):
 
     log = tmp_path / "order.log"
     monkeypatch.setenv("AB_TEST_LOG", str(log))
-    monkeypatch.setenv("TMPDIR", str(tmp_path))
-    assert ab.main(["--repo", str(repo), "--workload", "w",
-                    "--seeds", "1,2", "--pairs", "2"]) == 0
+    monkeypatch.setattr(ab, "ROOT", str(repo))
+    # tempfile caches its directory on first use, so point the cache
+    # (not TMPDIR) at tmp_path for the clean-up check below
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert ab.main(["--workload", "w", "--seeds", "1,2", "--pairs", "2"]) == 0
     out = capsys.readouterr().out
 
     # 4 pairs, the first side alternating pair by pair

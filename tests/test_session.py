@@ -1,12 +1,15 @@
 """``session.run_concurrently``: bounded, error-preserving, and every
-call runs in the caller's job group."""
+call runs in the caller's job group with local properties of its own."""
 
 from __future__ import annotations
 
+import json
 import threading
 import time
 
 import pytest
+from pyspark import TaskContext
+from pyspark.sql import functions as F
 
 from graal_cdc_spark.session import run_concurrently
 
@@ -59,3 +62,42 @@ def test_jobs_run_in_the_callers_job_group(spark):
     finally:
         sc._jsc.clearJobGroup()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
+
+
+def test_each_call_keeps_its_own_sql_execution_properties(spark):
+    # Spark SQL sets the execution id and the session's spark.* confs in
+    # the running thread's local properties for every action and
+    # restores them after it. Two concurrent multi-job actions (an AQE
+    # map-stage job, then the result job) must each see only their own.
+    @F.udf("string")
+    def props(item):
+        tc = TaskContext.get()
+        time.sleep(0.3)  # keep both items' actions in flight together
+        return json.dumps([
+            item,
+            tc.getLocalProperty("spark.sql.execution.id"),
+            tc.getLocalProperty("spark.sql.session.timeZone"),
+        ])
+
+    def fn(item):
+        rows = (
+            spark.range(0, 2, 1, 2)
+            .select(props(F.lit(item)).alias("map_side"))
+            .groupBy("map_side").count()
+            .select("map_side", props(F.lit(item)).alias("result_side"))
+            .collect()
+        )
+        return {json.dumps(json.loads(v)) for r in rows for v in r}
+
+    seen = run_concurrently(spark, fn, ["a", "b"])
+    execution_ids = []
+    for item, props_seen in zip(["a", "b"], seen):
+        decoded = [json.loads(p) for p in props_seen]
+        assert {p[0] for p in decoded} == {item}
+        # both of the item's jobs ran under one execution id, with the
+        # session's time zone propagated
+        assert len({p[1] for p in decoded}) == 1, decoded
+        assert decoded[0][1] is not None
+        assert {p[2] for p in decoded} == {"UTC"}, decoded
+        execution_ids.append(decoded[0][1])
+    assert execution_ids[0] != execution_ids[1]
